@@ -32,16 +32,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def quantize_scale(v: Column) -> Column:
     """Per-vector symmetric int8 scale: 127 / max|x| (guarded against
     all-zero vectors)."""

@@ -40,7 +40,7 @@ _PRUNE_MIN_DOCS = 100_000
 _DEFAULT_MAX_BUCKET = 1024
 
 
-def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
+def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int | None,
                          carry: list[str] | None = None) -> DataFrame:
     """Candidate pairs from an LSH bucket table with a hot-bucket cap.
 
@@ -58,8 +58,9 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
     emitted directly, and if the representative fails downstream
     verification against a member, that member's true pairs inside the
     hot bucket are lost. That is the documented recall trade for
-    bounded per-task time; pass ``max_bucket_size=None`` at the caller
-    for the exact quadratic behaviour.
+    bounded per-task time; ``cap=None`` (``max_bucket_size=None`` at the
+    caller) is the exact quadratic behaviour: all intra-bucket pairs,
+    with no cache and no decision job.
 
     ``carry`` columns (e.g. the simhash signature) are propagated to
     ``<name>_a`` / ``<name>_b`` on each pair; for star pairs the _a
@@ -78,6 +79,8 @@ def _capped_bucket_pairs(buckets: DataFrame, key: str, cap: int,
             b, (col(f"a.{key}") == col(f"b.{key}")) & (col("a._id") < col("b._id"))
         ).select(*pair_cols)
 
+    if cap is None:
+        return plain_pairs(buckets).distinct()
     # Decision job (the candidate-prune pattern below): cache the thin
     # bucket table, probe for ANY over-cap bucket with one
     # map-side-combined aggregate, and when there is none — the
@@ -196,6 +199,36 @@ def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     return df.select(col(id_col).alias("_id"), F.explode(shingles(col(text_col), n)).alias("_sh"))
 
 
+def _bounded_shingles(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_shingle_df: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """The pinned (``_id``, ``_sh``) table of the shingle self-join
+    operators and its per-doc counts (``_id``, ``_n``). Shingles in more
+    than ``max_shingle_df`` documents are dropped from both, so scores
+    are exact over the reduced shingle sets."""
+    sh = shingle_table(df, text_col, id_col, n)
+    if max_shingle_df is not None:
+        hot = (
+            sh.groupBy("_sh")
+            .agg(F.count("*").alias("_df"))
+            .filter(col("_df") > max_shingle_df)
+            .select("_sh")
+        )
+        # hot set is small by construction — broadcast anti-join
+        sh = sh.join(F.broadcast(hot), "_sh", "left_anti")
+    sh = pin_intermediate(sh.cache())
+    # Fill the cache with ONE serial job before the consumers fan out:
+    # without it, the per-doc counts aggregate and both self-join sides
+    # race to materialize the cold cache and BlockManager write locks
+    # serialize the duplicate partition computes (r12 one-shot A/B,
+    # clearCache between reps, 3 alternating rounds: racing cache
+    # 3.4-3.8 s, prefilled 3.3 s — and the same fix pattern as the
+    # minhash/simhash decision probes, which fill their caches as a
+    # side effect). The count result itself is unused.
+    sh.count()
+    return sh, sh.groupBy("_id").agg(F.count("*").alias("_n"))
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -220,27 +253,7 @@ def ngram_jaccard_pairs(
     exact-over-all-shingles semantics, and at 100 TB either keep a
     cutoff or compose behind LSH prefiltering (minhash_lsh_pairs).
     """
-    sh = shingle_table(df, text_col, id_col, n)
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("_sh")
-            .agg(F.count("*").alias("_df"))
-            .filter(col("_df") > max_shingle_df)
-            .select("_sh")
-        )
-        # hot set is small by construction — broadcast anti-join
-        sh = sh.join(F.broadcast(hot), "_sh", "left_anti")
-    sh = pin_intermediate(sh.cache())
-    # Fill the cache with ONE serial job before the consumers fan out:
-    # without it, the per-doc counts aggregate and both self-join sides
-    # race to materialize the cold cache and BlockManager write locks
-    # serialize the duplicate partition computes (r12 one-shot A/B,
-    # clearCache between reps, 3 alternating rounds: racing cache
-    # 3.4-3.8 s, prefilled 3.3 s — and the same fix pattern as the
-    # minhash/simhash decision probes, which fill their caches as a
-    # side effect). The count result itself is unused.
-    sh.count()
-    counts = sh.groupBy("_id").agg(F.count("*").alias("_n"))
+    sh, counts = _bounded_shingles(df, text_col, id_col, n, max_shingle_df)
     a, b = sh.alias("a"), sh.alias("b")
     common = (
         a.join(b, (col("a._sh") == col("b._sh")) & (col("a._id") < col("b._id")))
@@ -278,20 +291,7 @@ def containment_pairs(
     (hot-shingle cutoff applies to BOTH the join and the denominators,
     so the score is exact over the reduced shingle sets).
     """
-    sh = shingle_table(df, text_col, id_col, n)
-    if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("_sh")
-            .agg(F.count("*").alias("_df"))
-            .filter(col("_df") > max_shingle_df)
-            .select("_sh")
-        )
-        sh = sh.join(F.broadcast(hot), "_sh", "left_anti")
-    sh = pin_intermediate(sh.cache())
-    # serial cache fill before the consumer fan-out — see
-    # ngram_jaccard_pairs for the measured race it avoids
-    sh.count()
-    counts = sh.groupBy("_id").agg(F.count("*").alias("_n"))
+    sh, counts = _bounded_shingles(df, text_col, id_col, n, max_shingle_df)
     a, b = sh.alias("a"), sh.alias("b")
     common = (
         a.join(b, (col("a._sh") == col("b._sh")) & (col("a._id") != col("b._id")))
@@ -307,6 +307,23 @@ def containment_pairs(
     )
 
 
+def _minhash(sh: DataFrame, key: Column | str, num_perm: int) -> DataFrame:
+    """k minhashes per ``key`` group of an exploded (``_sh``) table.
+
+    Hash the shingle STRING once; derive the k permutations by
+    re-hashing the resulting 8-byte long — at k=128 this is ~k bytes
+    hashed per shingle instead of k full string passes. Explode +
+    groupBy(min): the partial aggregate combines map-side, so the
+    exchange carries one num_perm-long row per doc per input partition
+    — ~0.5 KB/doc at k=64. A per-row formulation (array_min over
+    transform, probed in r9) removes even that exchange but falls out
+    of whole-stage codegen at k=64 (5x wall at sf0.1) with no wall win
+    at 1M docs, so the aggregate stays.
+    """
+    mins = [F.min(F.xxhash64(col("_h0"), lit(i))).alias(f"mh_{i}") for i in range(num_perm)]
+    return sh.withColumn("_h0", F.xxhash64(col("_sh"))).groupBy(key).agg(*mins)
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_perm: int = 32, shingle_n: int = 4,
@@ -316,12 +333,8 @@ def minhash_signatures(
     One narrow pass: shingling + k hash-mins fold into a single
     aggregate over the exploded shingles (partial min combine map-side).
     """
-    # hash the shingle STRING once; derive the k permutations by
-    # re-hashing the resulting 8-byte long — at k=128 this is ~k bytes
-    # hashed per shingle instead of k full string passes
-    sh = shingle_table(df, text_col, id_col, shingle_n).withColumn("_h0", F.xxhash64(col("_sh")))
-    mins = [F.min(F.xxhash64(col("_h0"), lit(i))).alias(f"mh_{i}") for i in range(num_perm)]
-    return sh.groupBy(col("_id").alias(id_col)).agg(*mins)
+    sh = shingle_table(df, text_col, id_col, shingle_n)
+    return _minhash(sh, col("_id").alias(id_col), num_perm)
 
 
 def minhash_lsh_pairs(
@@ -366,31 +379,13 @@ def minhash_lsh_pairs(
         .filter(col("_arr").isNotNull())
         .cache()
     )
-    sh = base.select("_id", F.explode(col("_arr")).alias("_sh"))
-    # single string hash, then k cheap long re-hashes (see
-    # minhash_signatures). Explode + groupBy(min): the partial
-    # aggregate combines map-side, so the exchange carries one
-    # num_perm-long row per doc per input partition — ~0.5 KB/doc at
-    # k=64. A per-row formulation (array_min over transform, probed in
-    # r9) removes even that exchange but falls out of whole-stage
-    # codegen at k=64 (5x wall at sf0.1) with no wall win at 1M docs,
-    # so the aggregate stays.
-    mins = [F.min(F.xxhash64(col("_h0"), lit(i))).alias(f"mh_{i}") for i in range(num_perm)]
-    sig = sh.withColumn("_h0", F.xxhash64(col("_sh"))).groupBy("_id").agg(*mins)
+    sig = _minhash(base.select("_id", F.explode(col("_arr")).alias("_sh")), "_id", num_perm)
     band_cols = [
         F.struct(lit(bi).alias("band"), F.xxhash64(*[col(f"mh_{bi * r + j}") for j in range(r)]).alias("bh"))
         for bi in range(bands)
     ]
     buckets = sig.select("_id", F.explode(F.array(*band_cols)).alias("bk"))
-    if max_bucket_size is not None:
-        cands = _capped_bucket_pairs(buckets, "bk", max_bucket_size)
-    else:
-        a, b = buckets.alias("a"), buckets.alias("b")
-        cands = (
-            a.join(b, (col("a.bk") == col("b.bk")) & (col("a._id") < col("b._id")))
-            .select(col("a._id").alias("id_a"), col("b._id").alias("id_b"))
-            .distinct()
-        )
+    cands = _capped_bucket_pairs(buckets, "bk", max_bucket_size)
     # Prune the shingle table to candidate docs BEFORE the verification
     # joins: LSH exists because candidates are rare, so the exact-Jaccard
     # stage should shuffle candidates' shingles, not the corpus's (the
@@ -573,20 +568,9 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         col("simhash"),
         F.explode(F.array(*[chunk_expr(i) for i in range(n_chunks)])).alias("ck"),
     )
-    if max_bucket_size is not None:
-        cands = _capped_bucket_pairs(chunks, "ck", max_bucket_size, carry=["simhash"])
-        cands = cands.select("id_a", "id_b", col("simhash_a").alias("sig_a"),
-                             col("simhash_b").alias("sig_b"))
-    else:
-        a, b = chunks.alias("a"), chunks.alias("b")
-        cands = (
-            a.join(b, (col("a.ck") == col("b.ck")) & (col("a._id") < col("b._id")))
-            .select(col("a._id").alias("id_a"), col("b._id").alias("id_b"),
-                    col("a.simhash").alias("sig_a"), col("b.simhash").alias("sig_b"))
-            .distinct()
-        )
+    cands = _capped_bucket_pairs(chunks, "ck", max_bucket_size, carry=["simhash"])
     return (
-        cands.withColumn("hamming", F.bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+        cands.withColumn("hamming", F.bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
         .filter(col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )

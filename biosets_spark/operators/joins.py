@@ -242,10 +242,11 @@ _PINNED_MAX = 64
 
 
 def pin_intermediate(df: DataFrame) -> DataFrame:
-    """Register an already-cached intermediate in the shared lifecycle
-    registry so ``release_pinned_indexes()`` frees it — the one
-    unpersist point for every operator-internal ``.cache()`` (zip
-    indexes here, shingle/signature tables in operators.dedup)."""
+    """Register an already-cached or localCheckpoint'ed intermediate in
+    the shared lifecycle registry so ``release_pinned_indexes()`` frees
+    it — the one unpersist point for every operator-internal
+    ``.cache()`` (zip indexes here, shingle/signature tables in
+    operators.dedup) and every query-internal checkpoint."""
     _PINNED_INDEX_FRAMES.append(df)
     if len(_PINNED_INDEX_FRAMES) > _PINNED_MAX:
         del _PINNED_INDEX_FRAMES[0]  # oldest falls back to GC cleanup

@@ -31,8 +31,3 @@ REV_SQL = (
     "CAST(l_extendedprice AS DECIMAL(12,2))"
     " * (1 - CAST(l_discount AS DECIMAL(12,2)))"
 )
-
-
-def cents_sql(expr: str) -> str:
-    """Exact integer cents of a money expression (oracle side)."""
-    return f"CAST(ROUND({expr} * 100) AS BIGINT)"

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
 from .. import tables
+from ..operators.joins import pin_intermediate
 from . import dsum, q
 
 
@@ -85,7 +86,7 @@ def q_bom_explosion(spark, sf_dir):
     levels = [frontier]
     cur = frontier
     for depth in range(1, 33):
-        nxt = (
+        nxt = pin_intermediate(
             cur.alias("c")
             .join(edges.alias("e"), col("c.node") == col("e.parent"))
             .select(

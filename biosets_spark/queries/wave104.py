@@ -343,7 +343,7 @@ def q_pq_knn_rerank(spark, sf_dir):
          "with a plain GROUP BY. The bounded chain head keeps the "
          "round count fixed across scale factors (unbounded per-user "
          "chains measured 14.9 s at sf0.1; the 200k-diameter scale "
-         "evidence lives in scale_probe_r11_cc.py + the 10k-path "
+         "evidence lives in tools/scale_probe_r11_cc.py @ 4494a9f + the 10k-path "
          "pytest).",
     tags=["graph", "iterative"],
 )

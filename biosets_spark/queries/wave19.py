@@ -19,6 +19,7 @@ from pyspark.sql.functions import broadcast, col, lit
 
 from .. import tables
 from ..operators.dedup import portable_hash60
+from ..operators.joins import pin_intermediate
 from . import dfloor, q
 
 # Portable deterministic uniform in (0, 1]: md5 of the key's decimal
@@ -486,7 +487,7 @@ def q_pagerank_nations(spark, sf_dir):
     # sweep is then a broadcast join over tiny frames. Measured at
     # sf0.1 (noop sink, alternating reps): warm 1.4-1.9 s -> 0.6-0.9 s,
     # cold 4.95 -> 0.88; results bit-identical.
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin_intermediate(edges.localCheckpoint(eager=False))
     outdeg = edges.groupBy("src").agg(F.sum("w").alias("outw")) \
         .select(col("src").alias("od_src"), "outw")
     nodes = nat.select(col("n_name").alias("node"))

@@ -18,6 +18,7 @@ from pyspark.sql.functions import broadcast, col, lit
 
 from .. import tables
 from ..operators.dedup import portable_hash60
+from ..operators.joins import pin_intermediate
 from . import pair_expand, q
 
 # Part co-occurrence graph (edges oriented low-id -> high-id, support
@@ -93,7 +94,7 @@ def q_triangle_count(spark, sf_dir):
     # rounds), costing more one-shot than the checkpoint's build-time
     # toRdd pays (~1.1 s); warm reps favored the cache, but the bench
     # adjudicates the one-shot wall.
-    edge = edge.localCheckpoint(eager=False)
+    edge = pin_intermediate(edge.localCheckpoint(eager=False))
     deg = (
         edge.select(col("x").alias("v")).unionAll(edge.select(col("y").alias("v")))
         .groupBy("v").agg(F.count("*").alias("d"))
@@ -197,7 +198,7 @@ def q_bloom_audit(spark, sf_dir):
     d = tables.load(spark, sf_dir, "documents").select(
         "doc_id", F.md5("text").alias("fp"), (col("doc_id") % 10 == 0).alias("is_test")
     )
-    d = d.localCheckpoint(eager=False)  # four consumers below
+    d = pin_intermediate(d.localCheckpoint(eager=False))  # four consumers below
     hashed = d.crossJoin(broadcast(
         spark.range(3).select(col("id").cast("int").alias("i"))
     )).withColumn(

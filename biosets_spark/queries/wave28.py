@@ -19,6 +19,7 @@ from pyspark.sql.functions import broadcast, col
 
 from .. import tables
 from ..operators.dedup import portable_hash60
+from ..operators.joins import pin_intermediate
 from . import dfloor, q
 
 
@@ -159,7 +160,7 @@ def q_survival_km(spark, sf_dir):
         .withColumn("t", F.expr("us DIV 3600000000"))
     )
     risk = conv.groupBy("t").agg(F.count("*").alias("d"))
-    risk = risk.localCheckpoint(eager=False)  # three self-join consumers
+    risk = pin_intermediate(risk.localCheckpoint(eager=False))  # three self-join consumers
     r2 = risk.select(col("t").alias("t2"), col("d").alias("d2"))
     tbl = (
         risk.join(broadcast(r2), col("t2") >= col("t"))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
 from .. import tables
+from ..operators.joins import pin_intermediate
 from . import q
 from .wave12 import _langid_confusion_oracle
 
@@ -140,7 +141,7 @@ def q_cohens_kappa(spark, sf_dir):
     # re-runs the regex-heavy lang_id scan once per branch (measured
     # 3x). localCheckpoint the <=25-cell table so the corpus is
     # scanned once.
-    cells = (
+    cells = pin_intermediate(
         T.lang_id(docs)
         .groupBy("lang", "lang_pred")
         .agg(F.count("*").alias("n"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col
 
 from .. import tables
+from ..operators.joins import pin_intermediate
 from . import dfloor, q
 
 _HALVES_SQL = """
@@ -196,7 +197,7 @@ def q_kendall_rankings(spark, sf_dir):
     # cold cache materialization — the wave49 lesson). Safe here
     # because the frame never escapes the query: no post-release
     # re-materialization can hit the truncated lineage.
-    both = both.localCheckpoint(eager=False)
+    both = pin_intermediate(both.localCheckpoint(eager=False))
     pa, pb = both.alias("pa"), both.alias("pb")
     conc = (
         F.when(

@@ -153,10 +153,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in ALL_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str, tables: tuple = ALL_TABLES) -> None:
     """Register the test tables as temp views so queries can run
     through the plain ``spark.sql`` surface."""

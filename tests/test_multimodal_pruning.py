@@ -2,7 +2,7 @@
 metadata-only query over a table with large binary payloads must
 never read the payload column — the scan's ReadSchema is the
 contract. The measured bytes-read ratio lives in
-tools/scale_probe_r10b.py / PERFORMANCE.md; this pins the plan shape
+tools/scale_probe_r10b.py @ 4494a9f / PERFORMANCE.md; this pins the plan shape
 that makes the ratio hold at any scale."""
 
 import pytest
