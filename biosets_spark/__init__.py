@@ -13,6 +13,7 @@ Layers (SURVEY.md §7.0):
 
 from .dataset import BioDataset, BioDatasetDict
 from .load import ReadInstruction, load_dataset
+from .operators.joins import release_pinned_indexes
 from .session import get_spark
 from .sources.sink import load_from_disk, save_to_disk
 
@@ -123,15 +124,6 @@ def cleanup_cache_files(cache_directory: str) -> int:
     from .plans.fingerprint import FingerprintCache
 
     return FingerprintCache(cache_directory).clear()
-
-
-def release_pinned_indexes() -> int:
-    """Unpersist the partition-layout intermediates pinned by index-
-    based operators (kfold, slicing, horizontal align). Call between
-    jobs in a long-running session, after results are materialized."""
-    from .operators.joins import release_pinned_indexes as _release
-
-    return _release()
 
 
 __all__ = [

@@ -34,17 +34,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-
-def free_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor storage behind a localCheckpoint'ed
-    DataFrame. ``df.unpersist()`` is a no-op for checkpoints (the RDD
-    is persisted outside the CacheManager); the handle lives on the
-    LogicalRDD plan node. Safe to call on anything — silently does
-    nothing when the plan isn't a checkpoint."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+from .joins import pin_intermediate, release
 
 
 def _star_contraction(
@@ -52,7 +42,8 @@ def _star_contraction(
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.
     SoCC'14). ``edges`` is the symmetrized, null-free, distinct (u, v)
-    frame built by connected_components. Returns (node, component).
+    frame built by connected_components. Returns (node, component),
+    backed by a registered localCheckpoint.
 
     Invariant maintained: the working edge list ``e`` is directed
     u > v (each undirected edge once, no self-loops). Large-star
@@ -90,76 +81,78 @@ def _star_contraction(
         return ck, int(m["n"]), int(m["chk"])
 
     e, n_e, chk_e = _checkpoint_with_stats(edges.filter(col("u") > col("v")))
-    converged = False
-    for _ in range(max_iterations):
-        # large-star over both edge directions
-        nbrs = e.union(e.select(col("v").alias("u"), col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
-        ls = (
-            nbrs.join(mins, "u")
-            .withColumn("m", F.least(col("mn"), col("u")))
-            .filter(col("v") > col("u"))
-            .select(col("v").alias("u"), col("m").alias("v"))
-            # NO distinct here: duplicates (bounded by node degree)
-            # cannot change small-star's min aggregates and the final
-            # distinct below dedups the emitted edges — dropping the
-            # exchange saves one shuffle per round (r11, measured
-            # ~15% round cost)
-        )
-        # small-star over the (already u > v directed) large-star output
-        smins = ls.groupBy("u").agg(F.min("v").alias("m"))
-        j = ls.join(smins, "u")
-        new_e, n_new, chk_new = _checkpoint_with_stats(
-            j.select(col("v").alias("u"), col("m").alias("v"))
-            .union(j.select("u", col("m").alias("v")))
-            .filter(col("u") != col("v"))
-            .distinct()
-        )
-        if n_new == n_e and chk_new == chk_e:
-            # equal counts + empty one-sided difference => equal sets
-            changed = new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
-        else:
-            changed = 1
-        free_local_checkpoint(e)
-        e, n_e, chk_e = new_e, n_new, chk_new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"connected_components(algorithm='star') did not converge in "
-            f"{max_iterations} iterations; raise max_iterations (expected "
-            "O(log n) rounds)"
-        )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
+    try:
+        converged = False
+        for _ in range(max_iterations):
+            # large-star over both edge directions
+            nbrs = e.union(e.select(col("v").alias("u"), col("u").alias("v")))
+            mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
+            ls = (
+                nbrs.join(mins, "u")
+                .withColumn("m", F.least(col("mn"), col("u")))
+                .filter(col("v") > col("u"))
+                .select(col("v").alias("u"), col("m").alias("v"))
+                # NO distinct here: duplicates (bounded by node degree)
+                # cannot change small-star's min aggregates and the final
+                # distinct below dedups the emitted edges — dropping the
+                # exchange saves one shuffle per round (r11, measured
+                # ~15% round cost)
+            )
+            # small-star over the (already u > v directed) large-star output
+            smins = ls.groupBy("u").agg(F.min("v").alias("m"))
+            j = ls.join(smins, "u")
+            new_e, n_new, chk_new = _checkpoint_with_stats(
+                j.select(col("v").alias("u"), col("m").alias("v"))
+                .union(j.select("u", col("m").alias("v")))
+                .filter(col("u") != col("v"))
+                .distinct()
+            )
+            if n_new == n_e and chk_new == chk_e:
+                # equal counts + empty one-sided difference => equal sets
+                changed = new_e.join(e, ["u", "v"], "left_anti").limit(1).count()
+            else:
+                changed = 1
+            release(e)
+            e, n_e, chk_e = new_e, n_new, chk_new
+            if changed == 0:
+                converged = True
+                break
+        if not converged:
+            msg = (
+                f"connected_components(algorithm='star') did not converge in "
+                f"{max_iterations} iterations; raise max_iterations (expected "
+                "O(log n) rounds)"
+            )
+            if on_nonconvergence == "raise":
+                raise RuntimeError(msg)
+            import warnings
 
-        warnings.warn(msg, RuntimeWarning, stacklevel=3)
-    # star forest -> labels: non-roots point at the min, roots label
-    # themselves; the groupBy(min) also collapses any partial labels
-    # left by a warn-mode early exit. Reattach every original endpoint
-    # (a node whose only edges were self-pairs is dropped by the u > v
-    # orientation), self-labeled when the contraction never saw it.
-    labels = (
-        e.select(col("u").alias("node"), col("v").alias("component"))
-        .union(e.select(col("v").alias("node"), col("v").alias("component")))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-    )
-    out = (
-        edges.select("u")
-        .distinct()
-        .alias("n")
-        .join(labels.alias("l"), col("n.u") == col("l.node"), "left")
-        .select(
-            col("n.u").alias("node"),
-            F.coalesce(col("l.component"), col("n.u")).alias("component"),
+            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        # star forest -> labels: non-roots point at the min, roots label
+        # themselves; the groupBy(min) also collapses any partial labels
+        # left by a warn-mode early exit. Reattach every original endpoint
+        # (a node whose only edges were self-pairs is dropped by the u > v
+        # orientation), self-labeled when the contraction never saw it.
+        labels = (
+            e.select(col("u").alias("node"), col("v").alias("component"))
+            .union(e.select(col("v").alias("node"), col("v").alias("component")))
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
         )
-        .localCheckpoint(eager=True)
-    )
-    free_local_checkpoint(e)
-    return out
+        out = (
+            edges.select("u")
+            .distinct()
+            .alias("n")
+            .join(labels.alias("l"), col("n.u") == col("l.node"), "left")
+            .select(
+                col("n.u").alias("node"),
+                F.coalesce(col("l.component"), col("n.u")).alias("component"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        release(e)
+    return pin_intermediate(out)
 
 
 def connected_components(
@@ -201,12 +194,11 @@ def connected_components(
     round — marginally cheaper on the diameter-1-2 graphs near-dup
     detectors emit).
 
-    Storage note: the returned frame is backed by the FINAL
-    iteration's localCheckpoint, which stays pinned on the executors
-    (intermediate rounds are freed as the loop runs). Long-running
-    sessions that call this repeatedly should release it once the
-    result is materialized/persisted:
-    ``free_local_checkpoint(result)`` (as embedding_dup_pairs does).
+    Storage note: on the distributed paths the returned frame reads
+    the final round's localCheckpoint, registered with
+    ``joins.pin_intermediate``; call ``release_pinned_indexes()`` once
+    the result is materialized. The edge cache and the intermediate
+    rounds are freed before this returns or raises.
     """
     if on_nonconvergence not in ("raise", "warn"):
         raise ValueError("on_nonconvergence must be 'raise' or 'warn'")
@@ -223,117 +215,128 @@ def connected_components(
         .distinct()
         .cache()
     )
-    n_edges = edges.count()
-    if n_edges <= small_graph_threshold:
-        rows = edges.collect()
-        parent: dict = {}
+    try:
+        if edges.count() <= small_graph_threshold:
+            return _union_find(edges)
+        if algorithm == "star":
+            return _star_contraction(edges, max_iterations, on_nonconvergence)
+        return _label_propagation(edges, max_iterations, on_nonconvergence)
+    finally:
+        release(edges)
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
 
-        for r in rows:
-            u, v = r["u"], r["v"]
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[ru] = rv
-        comp_min: dict = {}
-        for node in parent:
-            root = find(node)
-            cur = comp_min.get(root)
-            if cur is None or node < cur:
-                comp_min[root] = node
-        out_schema = (
-            edges.select(
-                col("u").alias("node"), col("u").alias("component")
-            ).schema
-        )
-        out = pairs.sparkSession.createDataFrame(
-            [(n, comp_min[find(n)]) for n in parent], out_schema
-        )
-        edges.unpersist()
-        return out
+def _union_find(edges: DataFrame) -> DataFrame:
+    """Driver-side union-find over the collected ``edges``: the small-
+    graph fast path. Returns (node, component) from a local list."""
+    rows = edges.collect()
+    parent: dict = {}
 
-    if algorithm == "star":
-        out = _star_contraction(edges, max_iterations, on_nonconvergence)
-        edges.unpersist()
-        return out
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
+    for r in rows:
+        u, v = r["u"], r["v"]
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[ru] = rv
+    comp_min: dict = {}
+    for node in parent:
+        root = find(node)
+        cur = comp_min.get(root)
+        if cur is None or node < cur:
+            comp_min[root] = node
+    out_schema = (
+        edges.select(
+            col("u").alias("node"), col("u").alias("component")
+        ).schema
+    )
+    return edges.sparkSession.createDataFrame(
+        [(n, comp_min[find(n)]) for n in parent], out_schema
+    )
+
+
+def _label_propagation(
+    edges: DataFrame, max_iterations: int, on_nonconvergence: str
+) -> DataFrame:
+    """Plain min-label propagation over ``edges``: one join + one
+    groupBy per round, O(diameter) rounds. Returns (node, component),
+    backed by the last round's localCheckpoint, registered."""
     labels = edges.select("u").distinct().withColumn("component", col("u")).cache()
+    try:
+        changed = 1
+        for _ in range(max_iterations):
+            # candidate labels: own label + min neighbor label (aliases
+            # break the shared lineage of the edge-derived frames). The
+            # own-label branch is tagged so the aggregate can carry each
+            # node's PREVIOUS label alongside the new minimum — the
+            # changed-count then rides the checkpoint's materialization
+            # job via ``observe`` (r12), where the former shape ran a
+            # full join of the new and old label tables every round (at
+            # scale: one extra two-sided label shuffle per round).
+            neighbor_labels = (
+                edges.alias("e")
+                .join(labels.alias("l"), col("e.v") == col("l.u"))
+                .select(
+                    col("e.u").alias("u"),
+                    col("l.component").alias("component"),
+                    lit(False).alias("_own"),
+                )
+            )
+            # localCheckpoint (not cache): materializes AND truncates the
+            # logical plan, so planning cost stays constant per iteration
+            # instead of growing with the accumulated iterative lineage —
+            # at 50+ rounds the un-truncated plan is itself a bottleneck
+            obs = Observation()
+            new_labels = (
+                labels.select("u", "component", lit(True).alias("_own"))
+                .union(neighbor_labels)
+                .groupBy("u")
+                .agg(
+                    F.min("component").alias("component"),
+                    # every node carries exactly one own-label row (labels
+                    # holds one row per node), so this max is that value
+                    F.max(F.when(col("_own"), col("component"))).alias("_old"),
+                )
+                .observe(
+                    obs,
+                    F.coalesce(
+                        F.sum(
+                            F.when(col("component") != col("_old"), 1).otherwise(0)
+                        ),
+                        lit(0),
+                    ).alias("changed"),
+                )
+                .select("u", "component")
+                .localCheckpoint(eager=True)
+            )
+            changed = int(obs.get["changed"])
+            # frees the cached round-0 labels AND each round's checkpoint
+            release(labels)
+            labels = new_labels
+            if changed == 0:
+                break
+        if changed != 0:
+            msg = (
+                f"connected_components did not converge in {max_iterations} "
+                "iterations (plain min-label propagation needs O(graph "
+                "diameter) rounds); raise max_iterations"
+            )
+            if on_nonconvergence == "raise":
+                raise RuntimeError(msg)
+            import warnings
 
-    changed = 1
-    for _ in range(max_iterations):
-        # candidate labels: own label + min neighbor label (aliases
-        # break the shared lineage of the edge-derived frames). The
-        # own-label branch is tagged so the aggregate can carry each
-        # node's PREVIOUS label alongside the new minimum — the
-        # changed-count then rides the checkpoint's materialization
-        # job via ``observe`` (r12), where the former shape ran a
-        # full join of the new and old label tables every round (at
-        # scale: one extra two-sided label shuffle per round).
-        neighbor_labels = (
-            edges.alias("e")
-            .join(labels.alias("l"), col("e.v") == col("l.u"))
-            .select(
-                col("e.u").alias("u"),
-                col("l.component").alias("component"),
-                lit(False).alias("_own"),
-            )
-        )
-        # localCheckpoint (not cache): materializes AND truncates the
-        # logical plan, so planning cost stays constant per iteration
-        # instead of growing with the accumulated iterative lineage —
-        # at 50+ rounds the un-truncated plan is itself a bottleneck
-        obs = Observation()
-        new_labels = (
-            labels.select("u", "component", lit(True).alias("_own"))
-            .union(neighbor_labels)
-            .groupBy("u")
-            .agg(
-                F.min("component").alias("component"),
-                # every node carries exactly one own-label row (labels
-                # holds one row per node), so this max is that value
-                F.max(F.when(col("_own"), col("component"))).alias("_old"),
-            )
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        F.when(col("component") != col("_old"), 1).otherwise(0)
-                    ),
-                    lit(0),
-                ).alias("changed"),
-            )
-            .select("u", "component")
-            .localCheckpoint(eager=True)
-        )
-        changed = int(obs.get["changed"])
-        # frees the cached round-0 labels AND each round's checkpoint
-        # (unpersist() alone is a no-op for checkpointed frames)
-        labels.unpersist()
-        free_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    if changed != 0:
-        msg = (
-            f"connected_components did not converge in {max_iterations} "
-            "iterations (plain min-label propagation needs O(graph "
-            "diameter) rounds); raise max_iterations"
-        )
-        if on_nonconvergence == "raise":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
-    return labels.select(col("u").alias("node"), "component")
+            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+    except BaseException:
+        release(labels)  # no returned plan reads the last round
+        raise
+    return pin_intermediate(labels).select(col("u").alias("node"), "component")
 
 
 def dedup_clusters(

@@ -24,6 +24,7 @@ deterministic input ordering.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -213,72 +214,62 @@ def zip_with_index(df: DataFrame, order_by: list[str] | None = None, col_name: s
     offsets, applied as a literal map. Two narrow passes, no data
     shuffle, rows never leave the JVM.
 
-    The returned frame references a cached intermediate (the pinned
-    partition layout). Every pinned intermediate is registered in a
-    module-level registry; once the indexed result (or anything
-    derived from it) has been materialized, call
-    ``release_pinned_indexes()`` to unpersist them all — batch jobs
-    can ignore this (executor teardown frees the cache), long-running
-    sessions should call it between jobs (r5 verdict task: explicit
-    lifecycle instead of a documented ``clearCache()``).
+    The returned frame reads a cached intermediate (the pinned
+    partition layout), registered with ``pin_intermediate``: call
+    ``release_pinned_indexes()`` once the indexed result (or anything
+    derived from it) has been materialized.
     """
     return _zip_with_index_impl(df, order_by, col_name)[0]
 
 
-# Pinned partition-layout intermediates (the .cache() inside
-# _zip_with_index_impl), kept so their lifecycle is explicit. Callers
-# (kfold_assign, align_horizontal, select_indices, shard) hand lazy
-# frames to the user, so the unpersist point is necessarily after the
-# USER materializes — hence a registry + release function rather than
-# an unpersist inside the operator. The registry is BOUNDED: past
-# _PINNED_MAX entries the oldest Python reference is dropped (not
-# unpersisted — its derived result may still be un-materialized), which
-# re-enables Spark's GC-driven ContextCleaner reclamation for it once
-# the caller's own references die; without the bound, a session that
-# never calls release_pinned_indexes() would accumulate pinned caches
-# forever (r6 review).
-_PINNED_INDEX_FRAMES: list[DataFrame] = []
-_PINNED_MAX = 64
+_PINNED: list[DataFrame] = []
 
 
 def pin_intermediate(df: DataFrame) -> DataFrame:
-    """Register an already-cached or localCheckpoint'ed intermediate in
-    the shared lifecycle registry so ``release_pinned_indexes()`` frees
-    it — the one unpersist point for every operator-internal
-    ``.cache()`` (zip indexes here, shingle/signature tables in
-    operators.dedup) and every query-internal checkpoint."""
-    _PINNED_INDEX_FRAMES.append(df)
-    if len(_PINNED_INDEX_FRAMES) > _PINNED_MAX:
-        del _PINNED_INDEX_FRAMES[0]  # oldest falls back to GC cleanup
+    """Register an already-cached or localCheckpoint'ed frame so
+    ``release_pinned_indexes()`` frees it, and return it.
+
+    The one pin rule: if only an operator's own jobs read a pinned
+    frame, the operator frees it with ``release`` before returning
+    (in a ``finally``, so an error frees it too). If a plan the
+    operator returns still reads it, the operator registers it here,
+    and the caller calls ``release_pinned_indexes()`` after
+    materializing that plan. Batch jobs may skip the release (executor
+    teardown frees the storage); long-running sessions call it
+    between jobs. The registry has no bound: nothing leaves it except
+    through a release.
+    """
+    _PINNED.append(df)
     return df
 
 
+def release(df: DataFrame) -> None:
+    """Free one pinned frame, cached or localCheckpoint'ed.
+    ``unpersist()`` drops a cache; a checkpoint's RDD is persisted
+    outside the CacheManager, behind the LogicalRDD plan node, so its
+    blocks are unpersisted there (a no-op for any other plan)."""
+    df.unpersist()
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Py4JError:
+        pass  # not a LogicalRDD: there is no checkpoint to free
+
+
 def release_pinned_indexes() -> int:
-    """Unpersist every operator-internal cached intermediate pinned
-    since the last release (``zip_with_index`` partition layouts, and
-    the dedup detectors' shingle/signature tables via
-    ``pin_intermediate``). Safe to call any time AFTER the derived
-    results have been materialized (collect/write). For plain
-    ``.cache()`` pins, a later re-materialization of a still-lazy
-    derived frame recomputes from source — guaranteed identical only
-    for deterministic sources. For ``localCheckpoint``-backed pins,
-    this ALSO frees the checkpoint's RDD blocks, and a checkpointed
-    RDD has truncated lineage: a consumer materialized after release
-    fails with missing-checkpoint-block errors instead of
-    recomputing — callers must fully materialize every derived frame
-    before releasing. Returns the number of frames released.
+    """Free every frame registered with ``pin_intermediate`` since the
+    last call (zip-index layouts, dedup shingle/signature tables,
+    connected-components labels, similarity-kernel checkpoints and
+    query-internal checkpoints) and return how many were freed. Call
+    it only AFTER every derived frame has been materialized
+    (collect/write): a lazy frame over a freed cache recomputes from
+    source (identical only for deterministic sources), and one over a
+    freed checkpoint fails with missing-block errors, because a
+    checkpoint has truncated lineage.
     """
     n = 0
-    while _PINNED_INDEX_FRAMES:
-        f = _PINNED_INDEX_FRAMES.pop()
+    while _PINNED:
         try:
-            f.unpersist()
-            # a localCheckpoint'ed pin (corpus_funnel stage frames) is
-            # persisted outside the CacheManager — unpersist() is a
-            # no-op for it; release the underlying RDD blocks too
-            from .graph import free_local_checkpoint
-
-            free_local_checkpoint(f)
+            release(_PINNED.pop())
             n += 1
         except Exception:
             pass  # session already stopped; nothing to release

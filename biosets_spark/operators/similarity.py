@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from .joins import pin_intermediate
 from .pq import _double_array_lit
 
 from ..functions.vectors import cosine, dot, norm
@@ -446,7 +447,7 @@ def embedding_dup_pairs(
             ).localCheckpoint(eager=True)
         finally:
             b.destroy()
-        return out
+        return pin_intermediate(out)
 
     B = n_blocks
     src = _block_pair_src(base, id_col, B)
@@ -561,7 +562,7 @@ def knn_all(
         finally:
             b.destroy()
         return (
-            cand.withColumn("rank", F.row_number().over(w))
+            pin_intermediate(cand).withColumn("rank", F.row_number().over(w))
             .filter(col("rank") <= k)
         )
 

@@ -39,8 +39,8 @@ def train_test_split(
     fractions = {c: test_size for c in classes}
     # zip_with_index pins its own partition layout; no second cache
     # needed here (the train anti-join and the test sample both read
-    # the same pinned ids). Long sessions: clearCache() after
-    # materializing both splits (see zip_with_index docstring).
+    # the same pinned ids). Long sessions: release_pinned_indexes()
+    # after materializing both splits (see pin_intermediate).
     with_id = zip_with_index(df, col_name="_split_id")
     test = with_id.sampleBy(stratify_by_column, fractions, seed=seed or 0)
     train = with_id.join(test.select("_split_id"), on="_split_id", how="left_anti")
@@ -179,9 +179,9 @@ def kfold(df: DataFrame, k: int, order_by: list[str]) -> list[tuple[DataFrame, D
     """k-fold with NTILE semantics over an explicit ordering (O4);
     fold assignment via ``kfold_assign`` (no single-partition sort).
 
-    The fold frame references a cached partition layout; long-running
-    sessions should call ``joins.release_pinned_indexes()`` after
-    materializing all folds (see zip_with_index docstring).
+    The fold frames read a registered partition-layout cache; call
+    ``release_pinned_indexes()`` after materializing all folds (the
+    rule is in ``joins.pin_intermediate``).
     """
     with_fold = kfold_assign(df, k, order_by)
     out = []

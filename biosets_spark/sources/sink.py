@@ -210,22 +210,24 @@ def upsert_parquet(
     upd_keys = updates.select(*keys).distinct().cache()
     base_key_counts = base.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n")).cache()
-    row = base_key_counts.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).alias("rows"),
-        F.count(F.lit(1)).alias("nkeys")).collect()[0]
-    n_base = row["rows"]
-    n_replaced_row = base_key_counts.join(upd_keys, keys, "left_semi").agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).alias("n")).collect()[0]
-    n_kept = n_base - n_replaced_row["n"]
-    n_new_keys = upd_keys.join(base_key_counts, keys, "left_anti").count()
-    kept = base.join(upd_keys, keys, "left_anti")
-    merged = kept.unionByName(updates)
+    try:
+        row = base_key_counts.agg(
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("rows"),
+            F.count(F.lit(1)).alias("nkeys")).collect()[0]
+        n_base = row["rows"]
+        n_replaced_row = base_key_counts.join(upd_keys, keys, "left_semi").agg(
+            F.coalesce(F.sum("_n"), F.lit(0)).alias("n")).collect()[0]
+        n_kept = n_base - n_replaced_row["n"]
+        n_new_keys = upd_keys.join(base_key_counts, keys, "left_anti").count()
+        kept = base.join(upd_keys, keys, "left_anti")
+        merged = kept.unionByName(updates)
 
-    tmp = path.rstrip("/") + "__upsert_tmp__"
-    merged.write.mode("overwrite").parquet(tmp)
-    n_total = spark.read.parquet(tmp).count()
-    upd_keys.unpersist()
-    base_key_counts.unpersist()
+        tmp = path.rstrip("/") + "__upsert_tmp__"
+        merged.write.mode("overwrite").parquet(tmp)
+        n_total = spark.read.parquet(tmp).count()
+    finally:
+        upd_keys.unpersist()
+        base_key_counts.unpersist()
     old = path.rstrip("/") + "__upsert_old__"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(path, old)

@@ -198,19 +198,41 @@ def test_ngram_hot_shingle_cutoff(docs):
 
 
 def test_connected_components_nonconvergence_raises(spark):
+    from biosets_spark import release_pinned_indexes
     from biosets_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(6)], "id_a long, id_b long"
     )  # diameter 6 > max_iterations=2
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     # the distributed label path must be forced: union-find solves any
     # small graph in one pass, and the star default converges a
     # 7-node chain within 2-3 rounds regardless of diameter
+    release_pinned_indexes()
+    before = persisted()
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(
             chain, max_iterations=2, small_graph_threshold=0,
             algorithm="label",
         ).collect()
+    release_pinned_indexes()
+    # raising frees the edge cache and the last round's checkpoint
+    assert persisted() == before
+    # the star path raises after one round on a 10-node chain, and
+    # frees its edge cache and working checkpoint too
+    chain10 = spark.createDataFrame(
+        [(i, i + 1) for i in range(9)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(
+            chain10, max_iterations=1, small_graph_threshold=0,
+            algorithm="star",
+        )
+    release_pinned_indexes()
+    assert persisted() == before
     # warn mode returns (partial) labels instead
     with pytest.warns(RuntimeWarning, match="did not converge"):
         out = connected_components(

@@ -211,6 +211,19 @@ def test_zip_with_index_release_pinned(spark):
     assert persistent_ids() - before == set()
 
 
+def test_pin_registry_has_no_bound(spark):
+    """Every registered pin stays reachable until a release: 65 cached
+    frames are all freed, and the CacheManager is left empty."""
+    import biosets_spark as B
+
+    B.release_pinned_indexes()  # drain pins from earlier tests
+    spark.catalog.clearCache()
+    for i in range(65):
+        J.pin_intermediate(spark.range(i + 1).cache()).count()
+    assert B.release_pinned_indexes() == 65
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_salted_join_matches_plain(spark):
     from biosets_spark.operators.skew import salted_join
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-from biosets_spark import release_pinned_indexes
 from perfbench.sparkstats import JobGroups
 from tests.conftest import SF_SMOKE
 from tools import probe
@@ -37,7 +36,6 @@ def test_unregistered_query_is_named(no_session, capsys):
 
 def test_rep_reports_phase_jobs(spark):
     rec = probe.run_rep(spark, JobGroups(spark), "q_dedup_ngram_jaccard", SF_SMOKE)
-    release_pinned_indexes()
     # the shingle cache's serial prefill count() runs at build
     assert rec["build_jobs"] >= 1
     assert rec["exec_jobs"] >= 1
@@ -47,3 +45,6 @@ def test_rep_reports_phase_jobs(spark):
     assert len(jobs) == rec["build_jobs"] + rec["exec_jobs"]
     assert all(j["duration_s"] is not None and j["duration_s"] >= 0 for j in jobs)
     assert sum(j["stages"] for j in jobs) == sum(rec["stages"].values())
+    # the rep releases its own pins after collect(), and none outlives it
+    assert rec["pins_released"] >= 1
+    assert rec["persisted_after_release"] == 0

@@ -1,6 +1,7 @@
-"""No pin outlives its query: every localCheckpoint a query takes is
-registered with pin_intermediate, so release_pinned_indexes() leaves
-the JVM persistent-RDD registry as the query found it."""
+"""No pin outlives its query: every localCheckpoint a query (or an
+operator it calls) takes is registered with pin_intermediate, so
+release_pinned_indexes() leaves the JVM persistent-RDD registry as the
+query found it."""
 
 from __future__ import annotations
 
@@ -22,6 +23,9 @@ CHECKPOINTING = [
     "q_powerlaw_alpha",
     "q_kendall_rankings",
     "q_bom_explosion",
+    "q_components_user_chains",
+    "q_dedup_embedding",
+    "q_knn_loo_eval",
 ]
 
 

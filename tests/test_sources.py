@@ -480,6 +480,26 @@ def test_upsert_parquet(spark, tmp_path):
     assert rows == {1: ("a", 10), 2: ("B", 99), 3: ("c", 30), 4: ("d", 40)}
 
 
+def test_upsert_parquet_error_frees_key_caches(spark, tmp_path):
+    """An update with a column the base lacks fails the union, and
+    the two key caches the stats fill are freed on that path too."""
+    from pyspark.errors import AnalysisException
+
+    from biosets_spark.sources.sink import upsert_parquet
+
+    path = str(tmp_path / "tbl")
+    upsert_parquet(spark, path, spark.createDataFrame(
+        [(1, "a")], "id long, name string"), keys="id")
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.isEmpty()
+    updates = spark.createDataFrame(
+        [(1, "b", 9)], "id long, name string, extra long")
+    with pytest.raises(AnalysisException):
+        upsert_parquet(spark, path, updates, keys="id")
+    assert cache.isEmpty() == before
+
+
 def test_compact_parquet(spark, tmp_path):
     """Many small files collapse to the row-count-derived target;
     data unchanged."""

@@ -7,13 +7,19 @@ Reads the tables under biosets_spark.tables.DEFAULT_SF_DIR
 and the cache the previous rep left, so each rep pays the cold one-pass
 regime a bench pass pays. ``fn()`` (build: plan construction plus any
 decision jobs the operators run eagerly) and ``collect()`` (execute)
-each run under their own job group, and one JSON line per rep reports:
+each run under their own job group; then the rep releases its pins and
+clears the cache again, as a bench pass does after every query. One
+JSON line per rep reports:
 
   build_s, exec_s            the two phase walls
   build_jobs, exec_jobs      Spark jobs per phase
   stages, shuffle_write_bytes, spill_bytes
                              {"build": ..., "exec": ...} per phase
   jobs                       [{id, phase, duration_s, stages, tasks}]
+  pins_released              frames release_pinned_indexes() freed
+  persisted_after_release    RDDs still persisted after that release;
+                             anything above 0 is a pin that outlived
+                             its query
 
 Every counter comes from the in-process status store
 (perfbench.sparkstats), so the Spark UI stays disabled. Stage and task
@@ -40,7 +46,7 @@ from biosets_spark import queries as _q  # noqa: E402
 from biosets_spark import release_pinned_indexes  # noqa: E402
 from biosets_spark.tables import DEFAULT_SF_DIR  # noqa: E402
 from biosets_spark.session import get_spark  # noqa: E402
-from perfbench.sparkstats import JobGroups  # noqa: E402
+from perfbench.sparkstats import JobGroups, persisted_rdds  # noqa: E402
 
 PHASES = ("build", "exec")
 
@@ -66,7 +72,8 @@ def _jobs(spark, phase: str, group: str) -> list[dict]:
 
 
 def run_rep(spark, groups: JobGroups, name: str, sf_dir: str) -> dict:
-    """One cold rep of query ``name``: release, build, collect, count."""
+    """One cold rep of query ``name``: release, build, collect, release,
+    count."""
     release_pinned_indexes()
     spark.catalog.clearCache()
     build = groups.start(f"{name}/build")
@@ -76,6 +83,8 @@ def run_rep(spark, groups: JobGroups, name: str, sf_dir: str) -> dict:
     execute = groups.start(f"{name}/exec")
     df.collect()
     t2 = time.perf_counter()
+    released = release_pinned_indexes()
+    spark.catalog.clearCache()
     c = {"build": groups.counters(build), "exec": groups.counters(execute)}
     return {
         "name": name,
@@ -87,6 +96,8 @@ def run_rep(spark, groups: JobGroups, name: str, sf_dir: str) -> dict:
         "shuffle_write_bytes": {p: c[p].shuffle_write_bytes for p in PHASES},
         "spill_bytes": {p: c[p].spill_bytes for p in PHASES},
         "jobs": _jobs(spark, "build", build) + _jobs(spark, "exec", execute),
+        "pins_released": released,
+        "persisted_after_release": persisted_rdds(spark),
     }
 
 
@@ -100,7 +111,10 @@ def main(argv: list[str] | None = None) -> None:
     unknown = [n for n in args.names if n not in _q.QUERIES]
     if unknown:
         ap.error(f"unregistered query: {', '.join(unknown)}")
-    spark = get_spark("biosets-spark-probe")
+    # the status store drops the oldest stages and jobs past these
+    # limits (default 1000), which a sweep of every query overruns
+    spark = get_spark("biosets-spark-probe", extra_conf={
+        "spark.ui.retainedStages": "100000", "spark.ui.retainedJobs": "100000"})
     # warm-up as bench.py: JVM, codegen, parquet footers, Python workers
     spark.read.parquet(os.path.join(DEFAULT_SF_DIR, "lineitem.parquet")).count()
     spark.range(0, 1024, 1, 32).mapInPandas(lambda it: it, "id long").count()
