@@ -278,12 +278,9 @@ class BioDataset:
         meta = dict(self.df.schema[col].metadata or {})
         if feature_type:
             meta[roles.FEATURE_TYPE_KEY] = feature_type
+        # the cast drops the column's metadata: re-apply all of it
         out = self.df.withColumn(col, roles.qcol(col).cast(dtype))
-        out = out.select(*[
-            roles.qcol(c).alias(c, metadata=meta) if c == col else roles.qcol(c)
-            for c in out.columns
-        ])
-        return self._wrap(out)
+        return self._wrap(roles.apply_roles(out, {col: meta}))
 
     def flatten(self) -> "BioDataset":
         """P9: recursively explode struct columns into ``parent.child``
@@ -312,17 +309,17 @@ class BioDataset:
 
     def get_data(self) -> "BioDataset":
         cols = roles.columns_with_role(self.df, roles.ROLE_FEATURE)
-        return self._wrap(self.df.select(*cols)) if cols else self
+        return self._wrap(self.df.select(*map(roles.qcol, cols))) if cols else self
 
     def get_target(self) -> "BioDataset":
         cols = self.get_target_col_names()
         if not cols:
             raise ValueError("no target columns tagged")
-        return self._wrap(self.df.select(*cols))
+        return self._wrap(self.df.select(*map(roles.qcol, cols)))
 
     def get_sample_metadata(self) -> "BioDataset":
         cols = roles.columns_with_role(self.df, roles.ROLE_SAMPLE, roles.ROLE_BATCH, roles.ROLE_METADATA)
-        return self._wrap(self.df.select(*cols))
+        return self._wrap(self.df.select(*map(roles.qcol, cols)))
 
     def get_feature_metadata(self) -> dict[str, dict]:
         return {

@@ -9,7 +9,8 @@ biodata.py:1037-1198 physical pipeline):
 2. per split: scan data shards (extension dispatch, schema promotion
    across shards), scan+union sample metadata;
 3. infer column roles by name patterns (biodata.py:596-705,
-   1381-1604);
+   1381-1604) into one {column: bio.* metadata} dict, applied in
+   one pass (one ``roles.apply_roles`` select) after steps 4-5;
 4. enrich: left-join sample metadata on the sample column (J1) or
    positionally when no key exists (J2); attach feature metadata to
    column StructField metadata (J4);
@@ -330,11 +331,12 @@ def load_dataset(
             b_col = b_col or _match_col(df.columns, BATCH_PATTERNS)
             t_col = target_column or _match_col(df.columns, TARGET_PATTERNS)
 
-        # -- tag roles ---------------------------------------------------
+        # -- tag roles: {column: bio.* updates}, applied in ONE select ---
+        tags: dict[str, dict] = {}
         if s_col and s_col in df.columns:
-            df = roles.with_role(df, s_col, roles.ROLE_SAMPLE)
+            tags[s_col] = {roles.ROLE_KEY: roles.ROLE_SAMPLE}
         if b_col and b_col in df.columns:
-            df = roles.with_role(df, b_col, roles.ROLE_BATCH)
+            tags[b_col] = {roles.ROLE_KEY: roles.ROLE_BATCH}
         for c in df.columns:
             if c in (s_col, b_col, t_col):
                 continue
@@ -343,7 +345,7 @@ def load_dataset(
             # they must not land in the feature matrix), plus anything
             # matching the metadata name patterns
             if c not in pre_enrich_cols or _match_col([c], METADATA_PATTERNS):
-                df = roles.with_role(df, c, roles.ROLE_METADATA)
+                tags[c] = {roles.ROLE_KEY: roles.ROLE_METADATA}
 
         # J5: set-containment feature-key detection (biodata.py:681-686)
         # — no name-pattern key matched, so pick the first feature-
@@ -366,15 +368,6 @@ def load_dataset(
                 )
             feature_meta, feature_names_ordered = _feature_meta_from_rows(fm_rows, fm_key)
 
-        # feature columns: everything untagged; attach per-column metadata (J4)
-        for f in df.schema.fields:
-            if (f.metadata or {}).get(roles.ROLE_KEY) is None and f.name != t_col:
-                meta_for = (feature_meta or {}).get(f.name)
-                df = roles.with_role(
-                    df, f.name, roles.ROLE_FEATURE,
-                    feature_type=feature_type or "value_with_metadata",
-                    meta=meta_for,
-                )
         if feature_meta:
             missing = set(feature_meta) - set(df.columns)
             if missing:
@@ -382,7 +375,7 @@ def load_dataset(
 
         # -- 5. label encoding (A1-A3) ----------------------------------
         if t_col and t_col in df.columns:
-            df = roles.with_role(df, t_col, roles.ROLE_TARGET)
+            tags[t_col] = {roles.ROLE_KEY: roles.ROLE_TARGET}
             if _labels.task_type(df, t_col) == "classification" or positive_labels or negative_labels:
                 if labels is None and not (positive_labels or negative_labels) and multi_shard:
                     # Reference errors on multi-file label inference
@@ -406,20 +399,24 @@ def load_dataset(
         # matrix breaks downstream assembly silently
         if add_missing_columns and feature_meta:
             fill_type = roles.FEATURE_TYPES.get(feature_type or "")
-            for name in feature_names_ordered:
-                if name not in df.columns:
-                    if fill_type is not None:
-                        fill = (F.lit(0).cast(fill_type) if zero_as_missing
-                                else F.lit(None).cast(fill_type))
-                    else:  # no registered dtype: legacy untyped fills
-                        fill = (F.lit(0) if zero_as_missing
-                                else F.lit(None).cast(T.StringType()))
-                    df = df.withColumn(name, fill)
-                    df = roles.with_role(df, name, roles.ROLE_FEATURE,
-                                         feature_type=feature_type or "value_with_metadata",
-                                         meta=(feature_meta or {}).get(name))
+            if fill_type is not None:
+                fill = F.lit(0).cast(fill_type) if zero_as_missing else F.lit(None).cast(fill_type)
+            else:  # no registered dtype: legacy untyped fills
+                fill = F.lit(0) if zero_as_missing else F.lit(None).cast(T.StringType())
+            fills = {name: fill for name in feature_names_ordered if name not in df.columns}
+            if fills:
+                df = df.withColumns(fills)
 
-        out[split_name] = BioDataset(df, split=split_name)
+        # feature columns: everything still untagged (a role read from
+        # the input file, or set by encode_labels, is kept), fills
+        # included; attach per-column metadata (J4)
+        for f in df.schema.fields:
+            if f.name not in tags and (f.metadata or {}).get(roles.ROLE_KEY) is None:
+                meta_for = (feature_meta or {}).get(f.name)
+                tags[f.name] = {roles.ROLE_KEY: roles.ROLE_FEATURE,
+                                roles.FEATURE_TYPE_KEY: feature_type or "value_with_metadata",
+                                **({} if meta_for is None else {roles.META_KEY: meta_for})}
+        out[split_name] = BioDataset(roles.apply_roles(df, tags), split=split_name)
 
     if split is not None:
         if isinstance(split, (list, tuple)):

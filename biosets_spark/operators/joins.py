@@ -179,11 +179,11 @@ def join_sample_metadata(
     msel = metadata.withColumnRenamed(mcol, sample_col) if mcol != sample_col else metadata
 
     snap = {**roles.roles_snapshot(dsel), **roles.roles_snapshot(msel)}
+    snap[sample_col] = {**snap.get(sample_col, {}), roles.ROLE_KEY: roles.ROLE_SAMPLE}
     out = dsel.join(broadcast(msel), on=sample_col, how="left")
     data_cols = [c for c in dsel.columns if c != sample_col]
-    out = out.select(sample_col, *meta_cols, *data_cols)
-    out = roles.apply_roles(out, snap)
-    return roles.with_role(out, sample_col, roles.ROLE_SAMPLE)
+    out = out.select(*map(roles.qcol, [sample_col, *meta_cols, *data_cols]))
+    return roles.apply_roles(out, snap)
 
 
 def zip_with_index_counted(

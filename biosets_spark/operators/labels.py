@@ -35,7 +35,7 @@ TARGET_COLUMN = "encoded_labels"  # reference: biodata.py:62
 
 def label_dictionary(df: DataFrame, col: str) -> list:
     """Sorted distinct non-null values of the target column (A1)."""
-    rows = df.select(col).where(F.col(col).isNotNull()).distinct().collect()
+    rows = df.select(roles.qcol(col)).where(roles.qcol(col).isNotNull()).distinct().collect()
     return sorted(r[0] for r in rows)
 
 
@@ -86,7 +86,7 @@ def encode_labels(
     if output_col in df.columns:
         output_col = output_col + "_"  # rename-on-collision, biodata.py:634-638
     if positive_labels or negative_labels:
-        expr = binary_encode_expr(F.col(target_col), positive_labels, negative_labels)
+        expr = binary_encode_expr(roles.qcol(target_col), positive_labels, negative_labels)
         out = df.withColumn(output_col, expr)
         out = roles.with_role(
             out,
@@ -99,7 +99,7 @@ def encode_labels(
         return out, [0, 1]
     if labels is None:
         labels = label_dictionary(df, target_col)
-    out = df.withColumn(output_col, encode_expr(F.col(target_col), labels))
+    out = df.withColumn(output_col, encode_expr(roles.qcol(target_col), labels))
     out = roles.with_role(
         out, output_col, roles.ROLE_TARGET, feature_type="class_label", labels=labels
     )
@@ -117,7 +117,7 @@ def decode(df: DataFrame, col: str, labels: list | None = None, output_col: str 
     labels = labels if labels is not None else roles.get_labels(df, col)
     if labels is None:
         raise ValueError(f"decode: no label dictionary for column {col!r}")
-    return df.withColumn(output_col or col, decode_expr(F.col(col), labels))
+    return df.withColumn(output_col or col, decode_expr(roles.qcol(col), labels))
 
 
 def task_type(df: DataFrame, col: str) -> str:

@@ -92,21 +92,6 @@ def qcol(name: str):
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def _set_field_metadata(df: DataFrame, col: str, updates: dict) -> DataFrame:
-    field = df.schema[col]
-    meta = dict(field.metadata or {})
-    for k, v in updates.items():
-        if v is None:
-            meta.pop(k, None)
-        else:
-            meta[k] = v
-    cols = [
-        qcol(f.name).alias(f.name, metadata=meta) if f.name == col else qcol(f.name)
-        for f in df.schema.fields
-    ]
-    return df.select(*cols)
-
-
 def with_role(
     df: DataFrame,
     col: str,
@@ -117,8 +102,11 @@ def with_role(
     positive_labels: list | None = None,
     negative_labels: list | None = None,
 ) -> DataFrame:
-    """Tag a column with a semantic role (and optional feature type /
-    label dictionary), preserving all other column metadata."""
+    """Tag one column with a semantic role (and optional feature type /
+    label dictionary), preserving all other column metadata. Tagging
+    many columns: build their dict and call ``apply_roles`` once."""
+    if col not in df.columns:
+        raise KeyError(f"with_role: no column named {col!r}")
     updates: dict = {ROLE_KEY: role}
     if feature_type is not None:
         updates[FEATURE_TYPE_KEY] = feature_type
@@ -130,7 +118,7 @@ def with_role(
         updates[POS_LABELS_KEY] = list(positive_labels)
     if negative_labels is not None:
         updates[NEG_LABELS_KEY] = list(negative_labels)
-    return _set_field_metadata(df, col, updates)
+    return apply_roles(df, {col: updates})
 
 
 def get_role(df: DataFrame, col: str) -> str | None:
@@ -165,13 +153,21 @@ def roles_snapshot(df: DataFrame) -> dict[str, dict]:
     return snap
 
 
-def apply_roles(df: DataFrame, snapshot: dict[str, dict]) -> DataFrame:
+def apply_roles(df: DataFrame, updates: dict[str, dict]) -> DataFrame:
+    """The one writer of column metadata: every role tag, cast and
+    snapshot re-application goes through here.
+
+    ``updates`` maps a column name to the metadata keys to set on it;
+    they are merged into the column's existing metadata (keys not named
+    keep their value). All columns are rewritten in ONE select, so
+    tagging any number of columns adds a single Project to the plan.
+    Names are quoted (``qcol``), so dotted names like ``OTU.1`` are
+    columns, not struct access. Names not in ``df`` are ignored."""
     cols = []
     for f in df.schema.fields:
-        if f.name in snapshot:
-            meta = dict(f.metadata or {})
-            meta.update(snapshot[f.name])
-            cols.append(F.col(f.name).alias(f.name, metadata=meta))
+        if f.name in updates:
+            meta = {**(f.metadata or {}), **updates[f.name]}
+            cols.append(qcol(f.name).alias(f.name, metadata=meta))
         else:
-            cols.append(F.col(f.name))
+            cols.append(qcol(f.name))
     return df.select(*cols)

@@ -149,11 +149,11 @@ def load_from_disk(spark: SparkSession, path: str):
         state = json.loads(state_text)
         for c, dt in (state.get("partition_schema") or {}).items():
             if c in df.columns and df.schema[c].dataType.simpleString() != dt:
-                df = df.withColumn(c, col(c).cast(dt))
+                df = df.withColumn(c, roles.qcol(c).cast(dt))
         df = roles.apply_roles(df, state.get("roles", {}))
         cols = [c for c in state.get("columns", []) if c in df.columns]
         if cols:
-            df = df.select(*cols)
+            df = df.select(*map(roles.qcol, cols))
     return df
 
 

@@ -15,7 +15,12 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from biosets_spark.session import get_spark
 
-    s = get_spark("biosets-spark-tests", shuffle_partitions=8)
+    # the status store evicts skipped stages first once past
+    # spark.ui.retainedStages (default 1000); the suite's shared session
+    # runs thousands, and test_probe reads its own stages back from the
+    # store — retain as many as tools/probe.py's own session does
+    s = get_spark("biosets-spark-tests", shuffle_partitions=8, extra_conf={
+        "spark.ui.retainedStages": "100000", "spark.ui.retainedJobs": "100000"})
     yield s
 
 

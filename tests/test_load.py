@@ -4,7 +4,7 @@
 
 import pytest
 
-from biosets_spark import load_dataset
+from biosets_spark import load_dataset, load_from_disk
 from biosets_spark.schema import roles
 
 
@@ -451,3 +451,77 @@ def test_streaming_dir_includes_subdirs_and_skips_preamble_opts(spark, tmp_path)
 
     with pytest.raises(ValueError, match="no streaming translation"):
         load_dataset(path=str(tmp_path), streaming=True, skip_rows=1, spark=spark)
+
+
+def test_dotted_column_names_load(spark, tmp_path):
+    """Dotted names (``OTU.1``) are columns, not struct access, through
+    the metadata join, role tagging, split, write and materialize."""
+    (tmp_path / "data.csv").write_text(
+        "sample,OTU.1,OTU.2\n" + "".join(f"s{i},{i},{10 * i}\n" for i in range(8)))
+    (tmp_path / "sample_metadata.csv").write_text(
+        "sample,age,disease\n"
+        + "".join(f"s{i},{30 + i},{'case' if i % 2 else 'control'}\n" for i in range(8)))
+    ds = load_dataset(path=str(tmp_path), positive_labels=["case"], spark=spark)
+    assert roles.columns_with_role(ds.df, roles.ROLE_FEATURE) == ["OTU.1", "OTU.2"]
+    assert roles.columns_with_role(ds.df, roles.ROLE_METADATA) == ["age"]
+    assert ds.get_data().columns == ["OTU.1", "OTU.2"]
+    parts = ds.train_test_split(test_size=0.25, seed=0)
+    assert parts["train"].num_rows + parts["test"].num_rows == 8
+    ds.to_parquet(str(tmp_path / "out.parquet"))
+    m = ds.materialize(str(tmp_path / "cache"))
+    assert m.num_rows == 8
+    assert roles.columns_with_role(m.df, roles.ROLE_FEATURE) == ["OTU.1", "OTU.2"]
+    ds.save_to_disk(str(tmp_path / "disk"))
+    back = load_from_disk(spark, str(tmp_path / "disk"))
+    assert roles.columns_with_role(back, roles.ROLE_FEATURE) == ["OTU.1", "OTU.2"]
+
+
+def test_dotted_target_column_encodes(spark, tmp_path):
+    (tmp_path / "data.csv").write_text(
+        "sample,disease.status,f1\ns1,case,1\ns2,control,2\ns3,case,3\n")
+    ds = load_dataset(path=str(tmp_path), target_column="disease.status", spark=spark)
+    assert roles.get_role(ds.df, "disease.status") == roles.ROLE_TARGET
+    assert sorted(r["encoded_labels"] for r in ds.head(3)) == [0, 0, 1]
+    assert sorted(r["encoded_labels"] for r in ds.decode().head(3)) == ["case", "case", "control"]
+    binary = load_dataset(path=str(tmp_path), target_column="disease.status",
+                          positive_labels=["case"], spark=spark)
+    assert sorted(r["encoded_labels"] for r in binary.head(3)) == [0, 1, 1]
+
+
+def _write_wide_dir(path, features: int) -> str:
+    path.mkdir()
+    names = [f"f{j}" for j in range(features)]
+    (path / "data.csv").write_text(
+        "sample," + ",".join(names) + "\n"
+        + "".join(f"s{i}," + ",".join(str(i * j) for j in range(features)) + "\n"
+                  for i in range(8)))
+    (path / "sample_metadata.csv").write_text(
+        "sample,age,disease\n"
+        + "".join(f"s{i},{30 + i},{'case' if i % 2 else 'control'}\n" for i in range(8)))
+    (path / "feature_metadata.csv").write_text(
+        "feature,chrom\n" + "".join(f"{n},chr{j % 22 + 1}\n" for j, n in enumerate(names)))
+    return str(path)
+
+
+def test_load_plan_does_not_grow_with_width(spark, tmp_path):
+    """Roles are applied in one select: the analyzed plan of a 100-feature
+    load has as many Project nodes as a 20-feature one."""
+    counts = []
+    for width in (20, 100):
+        ds = load_dataset(path=_write_wide_dir(tmp_path / f"w{width}", width),
+                          positive_labels=["case"], spark=spark)
+        assert len(roles.columns_with_role(ds.df, roles.ROLE_FEATURE)) == width
+        counts.append(ds.df._jdf.queryExecution().analyzed().toString().count("Project ["))
+    assert counts[0] == counts[1]
+
+
+def test_input_file_role_survives_load(spark, tmp_path):
+    """A column tagged in its input file keeps that role: untagged
+    columns become features, tagged ones are left alone."""
+    df = spark.createDataFrame([("s1", 0.5, 1), ("s2", 0.9, 2)], ["sample", "qc", "f1"])
+    df = roles.with_role(df, "qc", roles.ROLE_METADATA)
+    df.write.parquet(str(tmp_path / "pq"))
+    part = next((tmp_path / "pq").glob("part-*.parquet"))
+    ds = load_dataset(data_files=[str(part)], spark=spark)
+    assert roles.columns_with_role(ds.df, roles.ROLE_METADATA) == ["qc"]
+    assert roles.columns_with_role(ds.df, roles.ROLE_FEATURE) == ["f1"]
